@@ -11,6 +11,7 @@ import importlib
 import io
 
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from web_crawler_spark.operators import retrieval, selection as sel
@@ -23,6 +24,7 @@ TRICKY = [
     "tab\tand\x0bvertical\x0cfeeds\r\nnewline",
     "  MiXeD Case   runs  of   spaces ",
     "a b c d e",
+    "\tleading tab, trailing newline\n",
 ]
 
 
@@ -88,6 +90,15 @@ def test_quality_classifier_on_held_out_sentences(spark):
     empty = rows[len(pos) + len(neg)]
     assert (empty["n_tokens"], empty["clf_score"], empty["keep"]) == \
         (0, 0, False)
+
+
+def test_quality_clf_requires_bias_row(spark):
+    """A weight table without its bucket='' bias row must fail loudly, not
+    score every document away through an empty cross join."""
+    w = spark.read.parquet(sel.quality_clf_path()) \
+        .filter(F.col("bucket") != "")
+    with pytest.raises(ValueError, match="bias"):
+        sel.quality_clf_df(_docs(spark, ["some text"]), w)
 
 
 def test_committed_dsir_weights_reproducible():

@@ -179,10 +179,11 @@ def cmd_stats(spark, args, out=sys.stdout) -> None:
     # frontier observability (manifest-only — no Spark job): live delta
     # state of the merge-on-read table, the numbers an operator needs to
     # judge backlog and compaction debt
+    from .plans.epoch import FRONTIER_DDL
     from .sources.tables import DeltaFrontier
     fpath = os.path.join(args.workdir, "frontier")
     if os.path.exists(os.path.join(fpath, "_manifest.json")):
-        s = DeltaFrontier(fpath).stats()
+        s = DeltaFrontier(fpath, FRONTIER_DDL).stats()
         print("\nFrontier (merge-on-read):", file=out)
         print(f"  add rows: {s['add_rows']}  tombstones: {s['del_rows']}"
               f"  snapshots: {s['snapshots']}", file=out)

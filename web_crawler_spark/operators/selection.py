@@ -62,7 +62,9 @@ def quality_clf_path() -> str:
 # --- Python twins of the feature contract (training tools + tests) ---------
 
 def py_normalize(text: str) -> str:
-    return re.sub(LANGID_WS_CLASS, " ", (text or "").strip()).lower()
+    # strip(" "), not strip(): the JVM `trim` removes spaces only, so a
+    # leading tab or trailing newline becomes an empty boundary token there
+    return re.sub(LANGID_WS_CLASS, " ", (text or "").strip(" ")).lower()
 
 
 def py_tokens(text: str) -> list:
@@ -161,10 +163,14 @@ def quality_clf_df(df: DataFrame, weights: DataFrame, text_col: str = "text",
              <=> bias + mean(w) >= 0  <=>  sigmoid(bias + mean(w)) >= 1/2
 
     Returns (id_col, n_tokens bigint, clf_score bigint, keep boolean);
-    empty docs report 0/0/false (no evidence -> drop).
+    empty docs report 0/0/false (no evidence -> drop). Raises unless the
+    table holds exactly one bias row.
     """
-    bias = weights.filter(F.col("bucket") == "").select(
-        F.col("w").alias("_bias"))
+    bias_rows = weights.filter(F.col("bucket") == "").select("w").take(2)
+    if len(bias_rows) != 1:
+        raise ValueError("quality classifier weights need exactly one bias "
+                         f"row (bucket=''), found {len(bias_rows)}")
+    bias = F.lit(bias_rows[0]["w"]).cast("bigint")
     m = weights.filter(F.col("bucket") != "")
     toks = df.select(id_col,
                      F.explode(hashed_features_col(F.col(text_col),
@@ -175,12 +181,11 @@ def quality_clf_df(df: DataFrame, weights: DataFrame, text_col: str = "text",
               .groupBy(id_col)
               .agg(F.sum("w").alias("_s"), F.count("*").alias("_n")))
     zero = F.lit(0).cast("bigint")
-    out = (df.select(id_col).crossJoin(F.broadcast(bias))
-           .join(scored, id_col, "left"))
+    out = df.select(id_col).join(scored, id_col, "left")
     return out.select(
         F.col(id_col),
         F.coalesce("_n", zero).alias("n_tokens"),
         F.coalesce("_s", zero).alias("clf_score"),
         ((F.coalesce("_n", zero) > 0) &
-         (F.coalesce("_s", zero) + F.col("_bias") * F.coalesce("_n", zero)
+         (F.coalesce("_s", zero) + bias * F.coalesce("_n", zero)
           >= 0)).alias("keep"))

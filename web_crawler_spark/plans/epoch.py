@@ -110,12 +110,6 @@ class CrawlConfig:
     #: built via operators.robots.collect_rules; delays merged into
     #: host_delays at engine init, prefixes filter the frontier each epoch
     robots_rules: Dict[str, tuple] = field(default_factory=dict)
-    #: retained for API compat; the engine now ALWAYS probes via the
-    #: shard-aligned cogroup plan fed by the persisted seen_shards table
-    #: (round-4 verdict Next #1: no bloom bytes ever visit the driver).
-    #: The broadcast probe remains available at operator level
-    #: (dedup.seen_filter without bits=).
-    bloom_broadcast_max_bytes: int = 64 << 20
     #: compact the seen_shards table (distributed or_merge_bits rewrite)
     #: once it holds more than this many snapshots — bounds the probe-side
     #: scan to ~this×|filter| bytes while keeping per-epoch writes append-only
@@ -478,7 +472,7 @@ class CrawlEngine:
         # full-row materialization at the boundary in each of the ~6 jobs
         # that consume `fetched` — while the explicit count/agg jobs over
         # the checkpoint cost ~1 s/epoch (and the staged-frontier count is
-        # a parquet-footer metadata read, no data scan).
+        # read from parquet footers, no Spark job).
 
         ok = fetched.filter(F.col("fetch_status") == "ok")
 
