@@ -24,56 +24,49 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Headline set: the crawl pipeline (the engine's raison d'etre) + the widest
-# relational / training-data operators. Everything else in queries() still
-# runs under the driver's correctness gate.
-HEADLINE = [
-    "crawl_extract",        # canonicalize -> fetch-join -> Arrow parse UDF
-    "crawl_discover",       # link-extraction UDTF + explode + canonicalize
-    "crawl_full",           # full multi-epoch engine w/ politeness + dedup
-    "pricing_summary",      # scan-heavy aggregation (TPC-H Q1 shape)
-    "top_revenue_orders",   # shuffle join + agg + top-k
-    "first_event_per_user", # window dedup (D1 at scale)
-    "events_sessionize",    # sessionization window
-    "dedup_exact",          # content-hash dedup
-    "minhash_near_dup",     # MinHash+LSH near-dup
-    "token_stats",          # tokenization rollup
-    "quality_scores",       # quality features, pure built-ins
-    "ann_cosine_topk",      # brute-force cosine top-k
-    "ivf_cosine_topk",      # IVF-flat ANN (probe n of k inverted lists)
-    "multimodal_features",  # mapInPandas binary-payload feature plumbing
-]
-
-# Second headline tier (round-4 verdict Next #7): operators that landed
-# after the original HEADLINE froze for cross-round comparability. Timed in
-# the same session and emitted under separate keys ("value_v2",
-# "queries_v2") so the original total stays a like-for-like series while
-# these gain a perf history of their own.
-HEADLINE_V2 = [
-    "langid_ngram",         # trigram NB langid vs committed model table
-    "simhash_near_dup",     # 64-bit simhash, 4x16-bit band blocking
-    "lsh_cosine_buckets",   # hyperplane-LSH bucketing (committed planes)
-    "stream_politeness",    # applyInPandasWithState token-bucket stream
-    "corpus_assembly",      # decontaminate -> mixture-sample -> pack, fused
-]
-
-# Third tier: the late-round-5 curation/selection/retrieval family — same
-# rationale as V2 (new operators need a perf series without perturbing the
-# frozen comparable totals). Emitted under "value_v3"/"queries_v3".
-HEADLINE_V3 = [
-    "dedup_clusters",       # LSH pairs -> connected components -> canonical
-    "gopher_repetition",    # exact-integer top-2gram / dup-3gram shares
-    "pii_redact",           # regexp_count/replace scrub, pure JVM
-    "substring_dup_spans",  # k-gram islands -> maximal duplicated spans
-    "decontam_flags",       # 13-gram benchmark-overlap decontamination
-    "boilerplate_strip",    # per-host line doc-frequency template removal
-    "pack_sequences",       # concat-and-chunk token bin packing
-    "mixture_sample",       # salted-hash deterministic mixture weights
-    "host_pagerank",        # integer-exact link-graph power iterations
-    "dsir_weights",         # DSIR hashed-ngram importance scores
-    "quality_classifier",   # fasttext-style model-based quality gate
-    "bm25_topk",            # integer-rational BM25 ranked retrieval
-    "chunk_documents",      # sliding-window RAG chunking, map-side only
+#: The query registry as (name, tier), in run order. Tier 1 is the headline
+#: set: the crawl pipeline (the engine's raison d'etre) + the widest
+#: relational / training-data operators, frozen for cross-round
+#: comparability and emitted as "value"/"queries". Later tiers hold
+#: operators that landed after tier 1 froze (tier 2: round-4 verdict
+#: Next #7; tier 3: the late-round-5 curation/selection/retrieval family).
+#: They run after tier 1 in the same session, so they can never perturb
+#: the comparable series, and are emitted as "value_vN"/"queries_vN".
+#: Everything else in queries() still runs under the driver's correctness
+#: gate.
+QUERIES = [
+    ("crawl_extract", 1),        # canonicalize -> fetch-join -> Arrow parse UDF
+    ("crawl_discover", 1),       # link-extraction UDTF + explode + canonicalize
+    ("crawl_full", 1),           # full multi-epoch engine w/ politeness + dedup
+    ("pricing_summary", 1),      # scan-heavy aggregation (TPC-H Q1 shape)
+    ("top_revenue_orders", 1),   # shuffle join + agg + top-k
+    ("first_event_per_user", 1), # window dedup (D1 at scale)
+    ("events_sessionize", 1),    # sessionization window
+    ("dedup_exact", 1),          # content-hash dedup
+    ("minhash_near_dup", 1),     # MinHash+LSH near-dup
+    ("token_stats", 1),          # tokenization rollup
+    ("quality_scores", 1),       # quality features, pure built-ins
+    ("ann_cosine_topk", 1),      # brute-force cosine top-k
+    ("ivf_cosine_topk", 1),      # IVF-flat ANN (probe n of k inverted lists)
+    ("multimodal_features", 1),  # mapInPandas binary-payload feature plumbing
+    ("langid_ngram", 2),         # trigram NB langid vs committed model table
+    ("simhash_near_dup", 2),     # 64-bit simhash, 4x16-bit band blocking
+    ("lsh_cosine_buckets", 2),   # hyperplane-LSH bucketing (committed planes)
+    ("stream_politeness", 2),    # applyInPandasWithState token-bucket stream
+    ("corpus_assembly", 2),      # decontaminate -> mixture-sample -> pack, fused
+    ("dedup_clusters", 3),       # LSH pairs -> connected components -> canonical
+    ("gopher_repetition", 3),    # exact-integer top-2gram / dup-3gram shares
+    ("pii_redact", 3),           # regexp_count/replace scrub, pure JVM
+    ("substring_dup_spans", 3),  # k-gram islands -> maximal duplicated spans
+    ("decontam_flags", 3),       # 13-gram benchmark-overlap decontamination
+    ("boilerplate_strip", 3),    # per-host line doc-frequency template removal
+    ("pack_sequences", 3),       # concat-and-chunk token bin packing
+    ("mixture_sample", 3),       # salted-hash deterministic mixture weights
+    ("host_pagerank", 3),        # integer-exact link-graph power iterations
+    ("dsir_weights", 3),         # DSIR hashed-ngram importance scores
+    ("quality_classifier", 3),   # fasttext-style model-based quality gate
+    ("bm25_topk", 3),            # integer-rational BM25 ranked retrieval
+    ("chunk_documents", 3),      # sliding-window RAG chunking, map-side only
 ]
 
 
@@ -129,12 +122,15 @@ def main() -> None:
 
     spark = get_spark("bench", cores=args.cores)
     qs = entrymod.queries()
-    names = (args.queries.split(",") if args.queries else HEADLINE)
-    # validate BOTH tiers up front: a lost @_q registration must fail fast
+    tiers: dict[int, list] = {}
+    if args.queries:        # an explicit subset is timed alone, as tier 1
+        tiers[1] = args.queries.split(",")
+    else:
+        for name, tier in QUERIES:
+            tiers.setdefault(tier, []).append(name)
+    # validate EVERY tier up front: a lost @_q registration must fail fast
     # with exit 2, not KeyError after the frozen suite already ran
-    v2 = HEADLINE_V2 if args.queries is None else []
-    v3 = HEADLINE_V3 if args.queries is None else []
-    unknown = [n for n in list(names) + v2 + v3 if n not in qs]
+    unknown = [n for names in tiers.values() for n in names if n not in qs]
     if unknown:
         print(f"error: unknown queries: {unknown}", file=sys.stderr)
         sys.exit(2)
@@ -167,27 +163,18 @@ def main() -> None:
             print(f"# {name}: {best:.3f}s ({rows} rows)", file=sys.stderr)
         return timings
 
-    timings = run_set(names)
-    # V2 tier runs AFTER the frozen set so it can never perturb the
-    # comparable series; skipped when --queries selects an explicit subset.
-    timings_v2 = run_set(v2) if v2 else {}
-    timings_v3 = run_set(v3) if v3 else {}
-
-    total = round(sum(timings.values()), 3)
+    timings = {t: run_set(tiers[t]) for t in sorted(tiers)}
     out = {
         "metric": "headline_suite_seconds",
-        "value": total,
+        "value": round(sum(timings[1].values()), 3),
         "unit": "sec",
-        "queries": timings,
+        "queries": timings[1],
         "sf": sf,
         "cores": args.cores,
     }
-    if timings_v2:
-        out["value_v2"] = round(sum(timings_v2.values()), 3)
-        out["queries_v2"] = timings_v2
-    if timings_v3:
-        out["value_v3"] = round(sum(timings_v3.values()), 3)
-        out["queries_v3"] = timings_v3
+    for t in sorted(tiers)[1:]:
+        out[f"value_v{t}"] = round(sum(timings[t].values()), 3)
+        out[f"queries_v{t}"] = timings[t]
     out.update(control)
     if crawl_sec > 0:
         # articles stored / wall time of the full multi-epoch engine run —

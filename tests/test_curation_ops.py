@@ -30,6 +30,18 @@ def test_connected_components_min_label_multi_hop(spark):
     assert set(got.values()) == {1} and len(got) == 9
 
 
+def test_connected_components_raises_when_rounds_run_out(spark):
+    # a 12-node path needs 11 propagation rounds: with max_iters=3 the
+    # labels are partial (the path would split into several "clusters"),
+    # which must fail loudly; the default cap converges to the min node
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(11)], "id_a bigint, id_b bigint")
+    with pytest.raises(RuntimeError, match="max_iters=3"):
+        dedup.connected_components(edges, max_iters=3)
+    got = _cc_map(dedup.connected_components(edges))
+    assert got == {i: 0 for i in range(12)}
+
+
 def test_duplicate_clusters_transitive_merge(spark):
     # A~B and B~C above the 0.8 jaccard bar, A~C below it: pairwise dedup
     # sees two pairs, cluster dedup must emit ONE 3-doc cluster.

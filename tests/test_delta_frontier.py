@@ -349,35 +349,23 @@ def test_fetch_horizon_converges_past_backoff_penalties(spark, tmp_path):
     assert eng.frontier.read(spark).count() == 0
 
 
-def test_read_applies_legacy_3key_deletes(spark, tmp_path):
-    """Round-5 upgrade compat: delete files written by the pre-round-5
-    format carry only (url, discovered_seq, retries, __del_epoch). A
-    resumed legacy workdir must stay readable — legacy dels join on the
-    3-key + sequence rule, new dels on the full equality key, in the same
-    table."""
-    import json as _json
+def test_read_rejects_3key_delete_dir(spark, tmp_path):
+    """Delete files must carry the full 4-key equality key. A 3-key file
+    (url, discovered_seq, retries, __del_epoch), the pre-round-5 form,
+    would read as a null epoch_added under del_schema(), and the anti-join
+    would silently resurrect every row it tombstoned — read() must refuse
+    it, naming the dir, instead of joining or skipping it."""
+    import pytest
     t = DeltaFrontier(str(tmp_path / "f"), DDL)
     t.overwrite(_rows(spark, 10), epoch=0)
-    # hand-write a LEGACY del dir killing rows 0-3 (sequence rule: only
-    # epoch_added <= 0) and register it in the manifest like old code did
-    legacy = _rows(spark, 4).select("url", "discovered_seq", "retries") \
+    old = _rows(spark, 4).select("url", "discovered_seq", "retries") \
         .withColumn("__del_epoch", F.lit(0).cast("int"))
-    ldir = os.path.join(t.path, "del=1")
-    legacy.coalesce(1).write.parquet(ldir)
+    ddir = os.path.join(t.path, "del=1")
+    old.coalesce(1).write.parquet(ddir)
     man = t._manifest()
-    man["dels"]["del=1"] = {"rows": 4, "bytes": _dir_bytes(ldir)}
+    man["dels"]["del=1"] = {"rows": 4, "bytes": _dir_bytes(ddir)}
     t._write_manifest(man)
-    assert t.read(spark).count() == 6
-    # re-add one killed url with a NEWER epoch_added: the sequence rule
-    # must keep it alive (legacy semantics preserved)
-    t.commit_delta(2, t.stage_delta(
-        _rows(spark, 1, epoch_added=2),
-        _rows(spark, 0).select(*DeltaFrontier.KEY), 2))
-    assert t.read(spark).count() == 7
-    # and a NEW-format delete on the re-added row kills exactly it
-    t.commit_delta(3, t.stage_delta(
-        _rows(spark, 0, start=900),
-        _rows(spark, 1, epoch_added=2).select(*DeltaFrontier.KEY), 3))
-    live = t.read(spark).collect()
-    assert len(live) == 6
-    assert all(r.epoch_added == 0 for r in live)
+    with pytest.raises(ValueError, match="del=1"):
+        t.read(spark)
+    with pytest.raises(ValueError, match="del=1"):
+        t.read(spark, due_before=1.0)

@@ -197,13 +197,13 @@ def test_bloom_jvm_hash_no_false_negatives(spark):
     u = F.concat(F.lit("https://h/x"), F.col("id").cast("string"))
     seen = spark.range(1000).select(u.alias("url"))
     b = dedup.BloomShards.sized_for(1000)
-    b.add_df(seen)
-    h1, h2 = dedup.bloom_hash_cols(F.col("url"))
-    probed = seen.withColumn("m", b.might_contain_udf()(h1, h2))
-    assert probed.filter(~F.col("m")).count() == 0
+    bits = b.build_bits_df(seen)
+    probed = b.flag_maybe_seen(seen, bits)
+    assert probed.count() == 1000
+    assert probed.filter(~F.col("__maybe_seen")).count() == 0
     cand = spark.range(500, 1500).select(u.alias("url"))
     out = {r["url"] for r in
-           dedup.seen_filter(cand, seen, b).collect()}
+           dedup.seen_filter(cand, seen, b, bits=bits).collect()}
     want = {f"https://h/x{i}" for i in range(1000, 1500)}
     assert out == want
 
@@ -217,8 +217,8 @@ def test_bloom_build_hashes_jvm_side(spark):
     u = F.concat(F.lit("https://h/x"), F.col("id").cast("string"))
     seen = spark.range(100).select(u.alias("url"))
     b = dedup.BloomShards.sized_for(100)
-    b.add_df(seen)
-    out = dedup.seen_filter(spark.range(200).select(u.alias("url")), seen, b)
+    out = dedup.seen_filter(spark.range(200).select(u.alias("url")), seen, b,
+                            bits=b.build_bits_df(seen))
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         out.explain(True)

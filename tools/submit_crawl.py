@@ -50,10 +50,16 @@ def main() -> None:
                     help="opt-in authority-weighted per-host budgets: log "
                          "the discovered host link graph and scale each "
                          "ranked host's epoch budget by its integer-exact "
-                         "PageRank share (default: off, uniform budgets)")
+                         "PageRank share, from --rank-budget-floor up to "
+                         "--per-host-budget. Hosts absent from the link "
+                         "graph keep the full --per-host-budget, so they "
+                         "are served above weakly-ranked hosts held at the "
+                         "floor (default: off, uniform budgets)")
     ap.add_argument("--rank-budget-floor", type=int, default=100,
                     help="minimum per-host budget for ranked hosts when "
-                         "--rank-budgets is on")
+                         "--rank-budgets is on; hosts absent from the link "
+                         "graph are not floored, they keep the full "
+                         "--per-host-budget")
     ap.add_argument("--per-host-budget", type=int, default=10_000,
                     help="max frontier rows a host may consume per epoch "
                          "(CrawlConfig.per_host_budget)")

@@ -235,7 +235,10 @@ def cmd_crawl(spark, args, out=sys.stdout) -> None:
         seeds = html_synth.seeds_df(spark, web)
     if page_start is not None:
         # page-based crawling: keep only the 1-based [page_start, page_end]
-        # slice of the seed list pages, in deterministic seed order
+        # slice of the seed list pages, in deterministic seed order. The
+        # unpartitioned window moves every row to one partition; that is
+        # bounded because a seed list is driver-sized (one row per source
+        # list page), never the frontier or the pages table.
         w = Window.orderBy("source_id", "url")
         seeds = (seeds.withColumn("__pg", F.row_number().over(w))
                  .filter((F.col("__pg") >= page_start) &

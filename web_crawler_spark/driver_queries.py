@@ -117,13 +117,16 @@ def crawl_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     politeness-scheduled epochs → parse → articles table."""
     pages = html_synth.pages_from_documents(spark, sf_dir).unionByName(
         html_synth.archive_pages_from_documents(spark, sf_dir))
+    # numbered once: every bootstrap job would otherwise re-run the
+    # single-partition window (the seed list is driver-sized)
     seeds = (html_synth.archive_pages_from_documents(spark, sf_dir)
-             .select("url").orderBy("url")
+             .select("url")
              .withColumn("source_id",
                          F.row_number().over(Window.orderBy("url"))
                          .cast("bigint"))
              .withColumn("parser_class", F.lit("rbc"))
-             .withColumn("priority", F.col("source_id").cast("int")))
+             .withColumn("priority", F.col("source_id").cast("int"))
+             .localCheckpoint())
     eng = CrawlEngine(spark, scratch_dir("wcs-q-"), pages,
                       CrawlConfig(per_host_budget=100_000))
     eng.run(seeds, max_epochs=3)

@@ -24,8 +24,9 @@ Scale notes (the 100 TB story):
     equi shuffle join, salted on hot hosts before the shuffle (AQE skew-join
     is also on as a backstop). At 10^10 pages both sides are
     bucket-partitionable by url in Iceberg, making the join co-located.
-  * the seen filter is bloom-shard broadcast + residual anti-join — the only
-    full-table touch of `articles` is column-pruned to `url`.
+  * the seen filter is a shard-aligned probe of the persisted bloom shards
+    + residual anti-join — the only full-table touch of `articles` is
+    column-pruned to `url`.
   * parse (Arrow UDF) runs only on rows that survived seen+date gates.
   * every epoch appends to articles/metrics/checkpoints atomically; a crash
     resumes from the last committed epoch (tables.LakeTable contract).
@@ -243,10 +244,11 @@ class CrawlEngine:
         set is under bloom_min_articles (below that the plain anti-join is
         cheaper than the probe's cogroup exchange).
 
-        (Re)build triggers: no committed filter yet, or the seen set
-        outgrew the capacity the filter was sized for (10x headroom) —
-        silently degraded FPP would route most scheduled URLs through the
-        exact anti-join suspect path. The rebuild reads articles
+        (Re)build triggers: no committed filter yet, a filter written under
+        another dedup.BIT_LAYOUT (probing it would give false negatives),
+        or the seen set outgrew the capacity the filter was sized for (10x
+        headroom) — silently degraded FPP would route most scheduled URLs
+        through the exact anti-join suspect path. The rebuild reads articles
         *before_epoch* so a replayed epoch never folds its own orphan
         output into the filter it probes."""
         if self._articles_rows is None:            # resume: count once
@@ -256,7 +258,8 @@ class CrawlEngine:
         if n_seen < self.cfg.bloom_min_articles:
             return None
         meta = self.seen_shards.meta()
-        if not meta or n_seen > meta["capacity"]:
+        if (not meta or meta.get("bit_layout") != dedup.BIT_LAYOUT
+                or n_seen > meta["capacity"]):
             capacity = max(n_seen * 10, 100_000)
             bloom = dedup.BloomShards.sized_for(capacity,
                                                 fpp=self.cfg.bloom_fpp)
@@ -265,7 +268,8 @@ class CrawlEngine:
                 bloom.build_bits_df(art.select("url"), "url"),
                 self._seen_shards_key(),
                 meta={"capacity": capacity, "n_shards": bloom.n_shards,
-                      "n_bits": bloom.n_bits, "n_hashes": bloom.n_hashes})
+                      "n_bits": bloom.n_bits, "n_hashes": bloom.n_hashes,
+                      "bit_layout": dedup.BIT_LAYOUT})
         else:
             bloom = dedup.BloomShards(n_shards=meta["n_shards"],
                                       n_bits_per_shard=meta["n_bits"],
@@ -618,8 +622,8 @@ class CrawlEngine:
         if bloom is not None and n_parsed:
             # fold this epoch's new urls into the persisted filter — a
             # distributed (shard, bits) append, zero bytes through the
-            # driver (the old add_df fold collected capacity-sized shard
-            # arrays per epoch: ~12 GB/epoch at the 10^10-URL filter).
+            # driver (collecting capacity-sized shard arrays instead would
+            # move ~12 GB/epoch at the 10^10-URL filter).
             # sparse=True writes set-bit POSITIONS when smaller than the
             # dense array (round 5): the append costs O(bits set), not
             # O(capacity) — a 1M-url epoch against the 10^10 filter

@@ -104,6 +104,8 @@ def paginate_early_stop(pages: DataFrame, page_size: int = 10,
             (F.size(kept) <= 0) |
             (F.col("r.totalResults").isNotNull() &
              (F.col("page") * page_size >= F.col("r.totalResults"))))
+    # unpartitioned window (one partition): bounded because an API page
+    # count is driver-sized — max_pages pages of one source, never articles
     w = (Window.orderBy("page")
          .rowsBetween(Window.unboundedPreceding, -1))
     stopped_before = F.max(F.when(stop, 1).otherwise(0)).over(w)

@@ -374,7 +374,6 @@ class DeltaFrontier(_Table):
     """
 
     KEY = ["url", "discovered_seq", "retries", "epoch_added"]
-    LEGACY_KEY = ["url", "discovered_seq", "retries"]
     #: broadcast the delete side under this many rows (~48 B/key row)
     BROADCAST_DELS_MAX = 4_000_000
 
@@ -383,11 +382,11 @@ class DeltaFrontier(_Table):
         super().__init__(path, schema_ddl)
         self.compact_ratio = compact_ratio
 
-    def del_schema(self, key: Optional[List[str]] = None) -> StructType:
-        """A delete file's schema: the equality key (KEY, or LEGACY_KEY for
-        pre-round-5 files) typed by the table DDL, plus __del_epoch."""
+    def del_schema(self) -> StructType:
+        """A delete file's schema: the equality KEY typed by the table DDL,
+        plus __del_epoch."""
         by_name = {f.name: f for f in self.schema.fields}
-        return StructType([by_name[k] for k in key or self.KEY] +
+        return StructType([by_name[k] for k in self.KEY] +
                           [StructField("__del_epoch", IntegerType())])
 
     # -- manifest ------------------------------------------------------------
@@ -602,43 +601,28 @@ class DeltaFrontier(_Table):
         del_dirs = self._committed_dirs(man, "dels")
         if not del_dirs:
             return base
-        # Delete files written before round 5 carry only the 3-key +
-        # __del_epoch (the sequence-rule form) — a resumed legacy workdir
-        # must stay readable, so dels are split by footer schema (cached
-        # per dir) and each vintage gets its own anti-join semantics.
-        legacy_dirs, new_dirs = [], []
-        for d in del_dirs:
-            (new_dirs if self._del_dir_has_epoch_added(d)
-             else legacy_dirs).append(d)
-        rows_of = {os.path.join(self.path, n): m["rows"]
-                   for n, m in man["dels"].items()}
-
-        def _maybe_broadcast(df, dirs):
-            n = sum(rows_of.get(d, 0) for d in dirs)
-            return F.broadcast(df) if n <= self.BROADCAST_DELS_MAX else df
-
-        if new_dirs:
-            dels = _maybe_broadcast(
-                self._scan(spark, new_dirs, self.del_schema()), new_dirs)
-            # pure equality on the full key — exact kills; see class
-            # docstring for why __del_epoch no longer needs to join
-            # (equality on epoch_added subsumes the sequence rule)
-            cond = [base[k] == dels[k] for k in self.KEY]
-            base = base.join(dels, cond, "left_anti")
-        if legacy_dirs:
-            ldels = _maybe_broadcast(
-                self._scan(spark, legacy_dirs,
-                           self.del_schema(self.LEGACY_KEY)),
-                legacy_dirs)
-            cond = [base[k] == ldels[k] for k in self.LEGACY_KEY]
-            cond.append(base["epoch_added"] <= ldels["__del_epoch"])
-            base = base.join(ldels, cond, "left_anti")
-        return base
+        # A delete file without epoch_added (the pre-round-5 3-key form)
+        # would read as a null key column under del_schema(), and the
+        # equality anti-join would then resurrect every row it tombstoned.
+        old = [d for d in del_dirs if not self._del_dir_has_epoch_added(d)]
+        if old:
+            raise ValueError(
+                f"{self.path}: delete dirs {old} lack the epoch_added key "
+                "column (pre-round-5 3-key format, no longer readable)")
+        n_dels = sum(m["rows"] for m in man["dels"].values())
+        dels = self._scan(spark, del_dirs, self.del_schema())
+        if n_dels <= self.BROADCAST_DELS_MAX:
+            dels = F.broadcast(dels)
+        # pure equality on the full key — exact kills; see class docstring
+        # for why __del_epoch no longer needs to join (equality on
+        # epoch_added subsumes the sequence rule)
+        cond = [base[k] == dels[k] for k in self.KEY]
+        return base.join(dels, cond, "left_anti")
 
     def _del_dir_has_epoch_added(self, d: str) -> bool:
-        """Schema vintage of a committed delete dir, from ONE parquet
-        footer (local metadata read, memoized per dir — committed dirs are
-        immutable)."""
+        """Whether a committed delete dir carries the 4-key form, from ONE
+        parquet footer (local metadata read, memoized per dir — committed
+        dirs are immutable). read()'s input check."""
         cache = getattr(self, "_del_schema_cache", None)
         if cache is None:
             cache = self._del_schema_cache = {}
