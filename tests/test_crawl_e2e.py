@@ -75,6 +75,44 @@ def test_crawl_order_matches_reference(spark, engine, golden):
     assert got_order == ref_order
 
 
+def test_extract_udf_links_are_canonical_in_page_order(spark, web):
+    """The extraction UDF returns each discovered link canonical with its
+    host, in page order. A link that fails canonicalization keeps its slot
+    with a null url and host, so array positions — and the crawl order
+    derived from them — stay the page's."""
+    from pyspark.sql import functions as F
+    from web_crawler_spark.functions.extract import extract_any_udf
+    odd = ('<html><body><ul data-test="news-list">'
+           '<li><a data-test="article-title-link" href="/news/rel">Rel</a>'
+           '</li><li><a data-test="article-title-link" '
+           'href="HTTPS://WWW.Investing.COM:443/news/x?b=2#frag">Up</a></li>'
+           '</ul></body></html>').encode()
+    rows = [(u, bytearray(web["pages"][u]), pc) for u, _, pc in web["seeds"]
+            if pc in ("rbc", "investing")]
+    rows.append((None, bytearray(odd), "investing"))
+    df = spark.createDataFrame(
+        rows, "base_url string, html binary, parser_class string")
+    null = F.lit(None).cast("string")
+    ext = extract_any_udf()(F.lit("list"), F.col("html"), F.col("base_url"),
+                            F.col("parser_class"), null, null)
+    got = df.select("base_url", "html", "parser_class",
+                    ext["links"].alias("links")).collect()
+    assert {r["parser_class"] for r in got} == {"rbc", "investing"}
+    for r in got:
+        exp = []
+        for lk in refspec.extract_links(bytes(r["html"]), r["base_url"] or "",
+                                        r["parser_class"]):
+            cu = refspec.canonicalize_url(lk["url"])
+            exp.append((cu, refspec.url_host(cu) if cu else None,
+                        lk["date_str"], lk["title"], lk["summary"]))
+        assert exp, r["base_url"]
+        assert [tuple(lk) for lk in r["links"]] == exp, r["base_url"]
+    odd_links = [tuple(lk)[:2] for lk in
+                 next(r for r in got if r["base_url"] is None)["links"]]
+    assert odd_links == [(None, None), ("https://www.investing.com/news/x?b=2",
+                                        "www.investing.com")]
+
+
 def test_politeness_schedule_respects_delay(spark, workdir, web):
     """Within every host the scheduler's assigned fetch times must be at
     least request_delay apart (token bucket, base_crawler.py:65-70)."""

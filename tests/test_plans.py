@@ -6,6 +6,7 @@ never row-at-a-time BatchEvalPython). These pin the properties the
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -47,6 +48,16 @@ def test_no_row_at_a_time_python_anywhere(spark):
                  "winnow_fingerprints", "lsh_cosine_buckets"):
         plan = _plan(QUERIES[name](spark, SF_DIR))
         assert "BatchEvalPython" not in plan, name
+
+
+def test_crawl_discover_is_one_python_pass(spark):
+    """Links leave the extraction UDF canonical, so link discovery crosses
+    the JVM/Python boundary once — no second canonicalize pass."""
+    from web_crawler_spark.driver_queries import QUERIES
+    plan = _plan(QUERIES["crawl_discover"](spark, SF_DIR))
+    nodes = [ln for ln in plan.splitlines()
+             if re.match(r"\(\d+\) ArrowEvalPython\b", ln)]
+    assert len(nodes) == 1, plan
 
 
 def test_topk_compiles_to_take_ordered(spark):

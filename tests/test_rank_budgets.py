@@ -8,10 +8,11 @@ preserves reference semantics exactly."""
 
 from pyspark.sql import functions as F
 
-from web_crawler_spark import html_synth
+from web_crawler_spark import html_synth, refspec
+from web_crawler_spark.functions import canonicalize
 from web_crawler_spark.operators import politeness
 from web_crawler_spark.operators.pagerank import pagerank_ranks
-from web_crawler_spark.plans.epoch import CrawlConfig, CrawlEngine
+from web_crawler_spark.plans.epoch import SEQ_STRIDE, CrawlConfig, CrawlEngine
 
 HA, HB, HC = ("www.ha.rbc.ua", "www.hb.rbc.ua", "www.hc.rbc.ua")
 
@@ -110,6 +111,43 @@ def test_engine_rank_budgets_e2e(spark, tmp_path):
     # rank(HA) = base + 0.85*(2*base_leaf) >> rank(HB) = rank(HC) = base
     # -> budget(HA) = 1 + 2*1 = 3 (full), budget(leaf) = 1 + 0 = 1
     assert m == {HA: 3, HB: 1, HC: 1}
+
+
+def test_engine_discovery_runs_no_second_canonicalize_pass(
+        spark, tmp_path, monkeypatch):
+    """Discovered links come out of the extraction UDF canonical with their
+    host: with the frame-level canonicalizer made to raise after bootstrap,
+    a rank-budget epoch still commits the host graph and the exact frontier
+    adds, in crawl order (list seq + 1 + page position, first occurrence)."""
+    web = _hub_web()
+    pages = html_synth.pages_df(spark, web)
+    seeds = html_synth.seeds_df(spark, web)
+    eng = CrawlEngine(spark, str(tmp_path / "w"), pages,
+                      CrawlConfig(request_delay=0.0, per_host_budget=3,
+                                  rank_host_budgets=True,
+                                  rank_budget_floor=1))
+    eng.bootstrap(seeds)
+
+    def _second_pass(*a, **k):
+        raise AssertionError("links canonicalized outside the extraction UDF")
+    monkeypatch.setattr(canonicalize, "with_canonical", _second_pass)
+    eng.run_epoch(0)
+    edges = {(r["src"], r["dst"]) for r in
+             eng.link_edges.read(spark).collect()}
+    assert edges == {(HB, HA), (HC, HA)}
+    exp = {}
+    for prio, (url, _, pc) in enumerate(web["seeds"]):
+        links = refspec.extract_links(web["pages"][url], url, pc)
+        for pos, lk in enumerate(links):
+            cu = refspec.canonicalize_url(lk["url"])
+            seq = prio * SEQ_STRIDE + 1 + pos
+            if cu and (cu not in exp or seq < exp[cu][1]):
+                exp[cu] = (refspec.url_host(cu), seq)
+    got = {(r["url"], r["host"], r["discovered_seq"]) for r in
+           eng.frontier.read(spark).filter(F.col("epoch_added") == 1)
+           .collect()}
+    assert got == {(u, h, s) for u, (h, s) in exp.items()}
+    assert len(got) == 18                # 6 articles on each of 3 hosts
 
 
 def test_engine_rank_budgets_off_is_uniform(spark, tmp_path):

@@ -148,8 +148,8 @@ def run_epoch(spark, workdir: str, cores: int) -> dict:
     # everything in every worker.
     warm = spark.range(0, 4 * cores, 1, 4 * cores) \
         .select(F.col("id").cast("string").alias("url"))
-    warm.select(canon.canonicalize_udf()(F.col("url")).alias("c")) \
-        .filter(F.col("c").isNotNull()).count()
+    warm.select(canon.canon_host_udf()(F.col("url"))["url_canon"]
+                .alias("c")).filter(F.col("c").isNotNull()).count()
 
     def _pipeline(src, dest):
         frontier = (canon.with_canonical(

@@ -92,18 +92,18 @@ def crawl_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
            {_PUBDATE_SQL} || ' 09:00' AS date_str
     FROM documents""")
 def crawl_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Archive list pages → link-extraction UDF → posexplode → canonicalize
-    (U1 + P1/P2/P12 + D1)."""
+    """Archive list pages → extraction UDF (links leave it canonical) →
+    explode → drop links that failed canonicalization (U1 + P1/P2/P12 +
+    D1). One Python pass per page."""
     archives = html_synth.archive_pages_from_documents(spark, sf_dir)
-    links = (archives
-             .select(F.posexplode(
-                 ex.extract_links_udf()(
-                     F.col("html"), F.col("url"),
-                     F.lit("rbc"))).alias("pos", "link"))
-             .select(F.col("link.url").alias("url"),
-                     F.col("link.date_str").alias("date_str")))
-    return (canon.with_canonical(links)
-            .select(F.col("url_canon").alias("url"), "date_str"))
+    null = F.lit(None).cast("string")
+    ext = ex.extract_any_udf()(F.lit("list"), F.col("html"), F.col("url"),
+                               F.lit("rbc"), null, null)
+    return (archives
+            .select(F.explode(ext["links"]).alias("link"))
+            .filter(F.col("link.url").isNotNull())
+            .select(F.col("link.url").alias("url"),
+                    F.col("link.date_str").alias("date_str")))
 
 
 @_q("crawl_full", f"""
@@ -175,7 +175,7 @@ def canonicalize_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.lit("?x="), (F.col("doc_id") % 3).cast("string"),
                    F.lit("&a=1#frag"))
     return d.select("doc_id",
-                    canon.canonicalize_udf()(raw).alias("url"))
+                    canon.canon_host_udf()(raw)["url_canon"].alias("url"))
 
 
 # ---------------------------------------------------------------------------

@@ -5,16 +5,18 @@ a superset of the reference's urljoin + validity check
 (/root/reference/app/scrapers/base_crawler.py:91-101). Per-row logic lives in
 ``refspec`` (shared with the golden oracle); here it is vectorized over
 pandas Series inside Arrow batches, so the executor-side cost is one Python
-call per ~10k rows, not per row.
+call per ~10k rows, not per row. ``canon_host_batch`` is the one batch entry
+point: ``canon_host_udf`` wraps it for seed/frontier urls, and the extraction
+UDF (functions/extract.py) calls it on discovered links in the same pass.
 """
 
 from __future__ import annotations
 
 import re
 from functools import lru_cache
+from typing import Tuple
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -96,19 +98,18 @@ def canonicalize_batch(urls: pd.Series) -> pd.Series:
     return canon.rename(None)
 
 
-@lru_cache(maxsize=1)
-def canonicalize_udf():
-    @pandas_udf("string")
-    def _canon(urls: pd.Series) -> pd.Series:
-        return canonicalize_batch(urls)
-    return _canon
+def canon_host_batch(urls: pd.Series) -> Tuple[pd.Series, pd.Series]:
+    """(canonical, host) Series for one Arrow batch: the host is extracted
+    from the canonical form, which always has a lowercase netloc followed by
+    a '/'-rooted path. Null canonical (invalid url) → null host."""
+    canon_urls = canonicalize_batch(urls)
+    hosts = canon_urls.str.extract(r"^[^:]+://([^/]+)", expand=False)
+    return canon_urls, hosts
 
 
 @lru_cache(maxsize=1)
 def canon_host_udf():
-    """url → struct(url_canon, host) in ONE Arrow pass (vectorized batch
-    canonicalizer; host extracted from the canonical form, which always has
-    a lowercase netloc followed by a '/'-rooted path).
+    """url → struct(url_canon, host) in ONE Arrow pass (see canon_host_batch).
 
     Marked nondeterministic on purpose: it is pure, but the flag stops
     Catalyst from duplicating the evaluation when a downstream null-filter is
@@ -116,8 +117,7 @@ def canon_host_udf():
     canonicalizer in the epoch plan without it)."""
     @pandas_udf("struct<url_canon:string, host:string>")
     def _ch(urls: pd.Series) -> pd.DataFrame:
-        canon_urls = canonicalize_batch(urls)
-        hosts = canon_urls.str.extract(r"^[^:]+://([^/]+)", expand=False)
+        canon_urls, hosts = canon_host_batch(urls)
         return pd.DataFrame({"url_canon": canon_urls, "host": hosts})
     return _ch.asNondeterministic()
 
@@ -131,20 +131,3 @@ def with_canonical(df, url_col: str = "url") -> "DataFrame":
             .withColumn("host", F.col("__ch.host"))
             .drop("__ch")
             .filter(F.col("url_canon").isNotNull()))
-
-
-def host_salt(host_col: Column, hot_hosts_salts, n_salt: int = 8) -> Column:
-    """Salted partition key to break hot-domain skew (north_rule).
-
-    ``hot_hosts_salts`` is a broadcast-able map {host: n_sub} built from per
-    -epoch host counts; cold hosts keep salt 0 (single partition â€” politeness
-    order preserved), hot hosts fan out into n_sub sub-keys. The salt must be
-    deterministic per URL so retries land on the same sub-partition: we use
-    xxhash64(url) % n_sub.
-    """
-    expr = F.lit(0)
-    for h, n in hot_hosts_salts.items():
-        expr = F.when(host_col == h,
-                      F.pmod(F.xxhash64(F.col("url_canon")), F.lit(int(n)))
-                      ).otherwise(expr)
-    return expr.cast("int")

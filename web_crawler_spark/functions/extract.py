@@ -1,4 +1,4 @@
-"""Article / link extraction as Arrow-batched pandas UDFs (U1/U2/U3).
+"""Article / link extraction as ONE Arrow-batched pandas UDF (U1/U2/U3).
 
 The per-document extraction logic is ``refspec`` (the same pure functions
 used to generate golden outputs), guaranteeing byte-identity by
@@ -6,6 +6,12 @@ construction. HTML parsing is inherently per-document work; the Spark-side
 contract is that it runs over Arrow record batches (pandas UDF), never as a
 row-at-a-time Python UDF, and the parse stage sits AFTER the seen-filter and
 politeness gates so at 100 TB we only parse URLs that will actually be kept.
+
+``extract_any_udf`` is the only extraction UDF — the engine epoch and the
+driver queries all call it, with a per-row or literal ``kind``. Discovered
+links leave it already canonical with their host (the batch canonicalizer of
+functions/canonicalize.py runs inside the same Python pass), so no plan runs
+a second Python pass over links.
 
 Reference parity: parse dispatch by parser_class column replicates the
 parser registry (/root/reference/app/utils/crawler_manager.py:24-35);
@@ -15,7 +21,6 @@ selector configs are broadcast (closure-captured constants — tiny).
 from __future__ import annotations
 
 from functools import lru_cache
-from typing import List, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -23,86 +28,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from .. import refspec
-
-ARTICLE_SCHEMA = ("struct<title:string, content:string, summary:string,"
-                  " published_date:string>")
-LINKS_SCHEMA = ("array<struct<url:string, date_str:string, title:string,"
-                " summary:string>>")
-
-
-@lru_cache(maxsize=1)
-def extract_article_udf():
-    """(html, parser_class, list_title, list_summary) →
-    struct(title, content, summary, published_date).
-
-    list_title/list_summary are the frontier-carried list-page metadata
-    (the investing parser's articles cache, investing_parser.py:29,191-197);
-    null for every other parser class. Returns all-null struct fields for
-    unparseable/missing-title pages; the caller drops rows with null title
-    (rbc_ukraine_parser.py:163-165)."""
-    @pandas_udf(ARTICLE_SCHEMA)
-    def _extract(html: pd.Series, parser_class: pd.Series,
-                 list_title: pd.Series, list_summary: pd.Series
-                 ) -> pd.DataFrame:
-        titles: List[Optional[str]] = []
-        contents: List[Optional[str]] = []
-        summaries: List[Optional[str]] = []
-        dates: List[Optional[str]] = []
-        for h, pc, lt, ls in zip(html, parser_class, list_title, list_summary):
-            art = None
-            if h is not None:
-                meta = ({"title": lt, "summary": ls}
-                        if lt is not None or ls is not None else None)
-                try:
-                    art = refspec.extract_article(h, pc or "rbc",
-                                                  list_meta=meta)
-                except Exception:
-                    art = None
-            if art is None:
-                titles.append(None); contents.append(None)
-                summaries.append(None); dates.append(None)
-            else:
-                titles.append(art["title"])
-                contents.append(art["content"])
-                summaries.append(art.get("summary"))
-                dates.append(art.get("published_date"))
-        return pd.DataFrame({"title": titles, "content": contents,
-                             "summary": summaries, "published_date": dates})
-    # Pure, but flagged nondeterministic so Catalyst materializes the struct
-    # ONCE instead of inlining the UDF into every downstream field reference
-    # (observed: 6 evaluations per row in the epoch plan without this — the
-    # parse stage was ~6x slower than the raw extractor).
-    return _extract.asNondeterministic()
-
-
-@lru_cache(maxsize=1)
-def extract_links_udf():
-    """List-page html → ordered array of (url, date_str): the UDTF-shaped
-    1-page→N-links step (base_crawler.py:144-150); caller explodes with
-    posexplode so discovery order is preserved as ``discovered_seq``."""
-    @pandas_udf(LINKS_SCHEMA)
-    def _links(html: pd.Series, base_url: pd.Series,
-               parser_class: pd.Series) -> pd.Series:
-        out = []
-        for h, b, pc in zip(html, base_url, parser_class):
-            if h is None:
-                out.append([])
-                continue
-            try:
-                links = refspec.extract_links(h, b or "", pc or "rbc")
-            except Exception:
-                links = []
-            out.append(links)   # already [{url, date_str, title, summary}]
-        return pd.Series(out)
-    # same single-evaluation guard as extract_article_udf
-    return _links.asNondeterministic()
-
+from . import canonicalize
 
 EXTRACT_SCHEMA = (
     "struct<title:string, content:string, summary:string,"
     " published_date:string,"
-    " links:array<struct<url:string, date_str:string, title:string,"
-    " summary:string>>>")
+    " links:array<struct<url:string, host:string, date_str:string,"
+    " title:string, summary:string>>>")
 
 
 @lru_cache(maxsize=1)
@@ -110,13 +42,21 @@ def extract_any_udf():
     """(kind, html, base_url, parser_class, list_title, list_summary) →
     struct(article fields..., links).
 
-    The engine-side combined extractor: one Arrow pass per fetched row,
-    branching on kind ('list' → link extraction, else article parse). This
-    lets the epoch pipeline drop the html column BEFORE its post-fetch
-    checkpoint — at 100 TB the html payload then lives only inside the
-    scan+join stage and is never materialized to block storage. Same
-    refspec calls per row as the standalone UDFs (which remain for the
-    single-purpose driver queries)."""
+    The only extraction UDF: one Arrow pass per fetched row, branching on
+    kind ('list' → link extraction, else article parse). Discovered links
+    leave it canonical, each with its host: every link url of the batch goes
+    through ONE ``canon_host_batch`` call, so no later plan runs a second
+    Python pass over links. A link that fails canonicalization keeps its
+    array slot with a null url and host — positions, and so the crawl order
+    derived from them, are the page order.
+
+    list_title/list_summary are the frontier-carried list-page metadata
+    (the investing parser's articles cache, investing_parser.py:29,191-197);
+    null for every other parser class. Unparseable/missing-title pages give
+    all-null article fields; the caller drops rows with null title
+    (rbc_ukraine_parser.py:163-165). The engine calls it before its
+    post-fetch checkpoint with html dropped right after, so at 100 TB the
+    html payload lives only inside the scan+join stage."""
     @pandas_udf(EXTRACT_SCHEMA)
     def _any(kind: pd.Series, html: pd.Series, base_url: pd.Series,
              parser_class: pd.Series, list_title: pd.Series,
@@ -144,9 +84,19 @@ def extract_any_udf():
             summaries.append(art.get("summary") if art else None)
             dates.append(art.get("published_date") if art else None)
             links_out.append(links)
+        flat = [lk for links in links_out if links for lk in links]
+        if flat:
+            urls, hosts = canonicalize.canon_host_batch(
+                pd.Series([lk["url"] for lk in flat], dtype="object"))
+            for lk, u, hst in zip(flat, urls, hosts):
+                lk["url"] = None if pd.isna(u) else u
+                lk["host"] = None if pd.isna(hst) else hst
         return pd.DataFrame({"title": titles, "content": contents,
                              "summary": summaries, "published_date": dates,
                              "links": links_out})
+    # Pure, but flagged nondeterministic so Catalyst materializes the struct
+    # ONCE instead of inlining the UDF into every downstream field reference
+    # (observed: 6 evaluations per row in the epoch plan without this).
     return _any.asNondeterministic()
 
 
@@ -192,21 +142,21 @@ def finish_articles(df: DataFrame, start_date: str | None = None,
                     end_date: str | None = None) -> DataFrame:
     """Post-extraction article finishing: drop null-title rows
     (rbc_ukraine_parser.py:163-165), date coalesce + permissive range
-    filter (P4), sink normalization (P8). Input needs an ``art`` struct
-    column (title, content, summary, published_date) + url_canon/host."""
+    filter (P4), sink normalization (P8). Input needs extract_any_udf's
+    ``ext`` struct column + url_canon/host."""
     cols = df.columns
-    df = df.filter(F.col("art.title").isNotNull())
+    df = df.filter(F.col("ext.title").isNotNull())
     pub = (F.coalesce(strip_time_col(F.col("date_str")),
-                      strip_time_col(F.col("art.published_date")))
-           if "date_str" in cols else strip_time_col(F.col("art.published_date")))
+                      strip_time_col(F.col("ext.published_date")))
+           if "date_str" in cols else strip_time_col(F.col("ext.published_date")))
     df = df.withColumn("published_date", pub)
     df = df.filter(date_in_range_col(F.col("published_date"), start_date, end_date))
     return df.select(
         *[c for c in ("source_id", "priority") if c in cols],
         F.col("url_canon").alias("url"),
         F.col("host"),
-        F.col("art.title").alias("title"),
-        normalize_content_col(F.col("art.content")).alias("content"),
+        F.col("ext.title").alias("title"),
+        normalize_content_col(F.col("ext.content")).alias("content"),
         F.col("published_date"),
         *( [F.col("discovered_seq")] if "discovered_seq" in cols else [] ),
     )
@@ -217,14 +167,14 @@ def parse_articles(fetched: DataFrame, start_date: str | None = None,
     """Fetched pages (url_canon, html, parser_class, source_id, date_str?) →
     parsed article rows, date-filtered, content-normalized.
 
-    Plan shape (checked in tests via .explain): single projection with the
-    Arrow eval, then JVM-side filter/normalize — no extra shuffle."""
+    Plan shape (tests/test_plans.py counts the Python nodes): single
+    projection with the Arrow eval, then JVM-side filter/normalize — no
+    extra shuffle."""
     cols = fetched.columns
-    lt = F.col("list_title") if "list_title" in cols \
-        else F.lit(None).cast("string")
-    ls = F.col("list_summary") if "list_summary" in cols \
-        else F.lit(None).cast("string")
+    null = F.lit(None).cast("string")
+    lt = F.col("list_title") if "list_title" in cols else null
+    ls = F.col("list_summary") if "list_summary" in cols else null
     df = fetched.withColumn(
-        "art", extract_article_udf()(F.col("html"), F.col("parser_class"),
-                                     lt, ls))
+        "ext", extract_any_udf()(F.lit("article"), F.col("html"), null,
+                                 F.col("parser_class"), lt, ls))
     return finish_articles(df, start_date, end_date)

@@ -85,7 +85,6 @@ def schedule_epoch(frontier: DataFrame,
                    per_host_budget: int = 10_000,
                    epoch_start_ts: float = 0.0,
                    host_delays: Optional[Dict[str, float]] = None,
-                   prebucket: bool = True,
                    approx_rows: Optional[int] = None,
                    host_budgets: Optional[DataFrame] = None,
                    ) -> DataFrame:
@@ -117,6 +116,7 @@ def schedule_epoch(frontier: DataFrame,
     # a frontier that fits the budget outright needs no truncation at all,
     # and the prebucket phase only pays off when a single host could exceed
     # the budget — both windows are exact either way, this is plan pruning.
+    prebucket = approx_rows is None or approx_rows > 4 * per_host_budget
     if host_budgets is not None:
         frontier = (frontier
                     .join(F.broadcast(host_budgets.select("host", "__budget")),
@@ -124,15 +124,11 @@ def schedule_epoch(frontier: DataFrame,
                     .withColumn("__budget",
                                 F.coalesce("__budget",
                                            F.lit(int(per_host_budget)))))
-        if approx_rows is not None:
-            prebucket = prebucket and approx_rows > 4 * per_host_budget
         frontier = truncate_per_host(frontier, per_host_budget, prebucket,
                                      budget_col="__budget").drop("__budget")
     elif approx_rows is not None and approx_rows <= per_host_budget:
         pass                                    # truncation is a no-op
     else:
-        if approx_rows is not None:
-            prebucket = prebucket and approx_rows > 4 * per_host_budget
         frontier = truncate_per_host(frontier, per_host_budget, prebucket)
 
     if len(host_delays) <= MAX_INLINE_DELAYS:

@@ -2,9 +2,11 @@
 
 One epoch is one DataFrame program (SURVEY.md §7, milestone M1-M4):
 
-    frontier ──schedule(politeness)──┬─ list rows ──fetch-join──links UDF──┐
-        ▲                            └─ article rows ──seen-filter──fetch──┤
-        │                                               join──parse UDF────┤
+    frontier ──schedule(politeness)──┬─ list rows ─────────────────────────┐
+        ▲                            └─ article rows ──seen-filter─────────┤
+        │                                                                  ▼
+        │     fetch-join──extract UDF: one Python pass per fetched row ────┤
+        │     (article fields, or links already canonical with host)       │
         │                                                                  ▼
     frontier Δ-commit (merge-on-read):                     articles.append()
       adds  = discovered ∪ requeued                        metrics.append()
@@ -480,18 +482,34 @@ class CrawlEngine:
 
         ok = fetched.filter(F.col("fetch_status") == "ok")
 
-        # 5a) list pages → extracted links (U1) → new frontier article rows
-        link_cols = ["url", "parser_class", "source_id", "priority",
-                     "discovered_seq"]
-        if cfg.rank_host_budgets:
-            link_cols.append("host")       # src side of the host link graph
+        # 5a) list pages → extracted links (U1) → new frontier article rows.
+        #     Links left the extraction UDF canonical with their host; one
+        #     that failed canonicalization kept its array slot with a null
+        #     url, so `pos` is the page position and crawl order is exact.
         links = (ok.filter(F.col("kind") == "list")
-                 .select(*link_cols,
-                         F.posexplode_outer(F.col("ext.links"))
+                 .select("host", "parser_class", "source_id", "priority",
+                         "discovered_seq",
+                         F.posexplode(F.col("ext.links"))
                          .alias("pos", "link"))
-                 .filter(F.col("link").isNotNull()))
-        disc_cols = [
+                 .filter(F.col("link.url").isNotNull()))
+        if self.link_edges is not None and n_sched_total - n_sched_arts > 0:
+            # distinct host→host citations discovered this epoch (self-loops
+            # carry no authority signal) — a JVM projection over the
+            # checkpointed `fetched`, no UDF re-evaluated. A replay
+            # overwrites its own epoch key (replace=True) — the graph a later
+            # epoch ranks is identical either way. Skipped when the epoch
+            # scheduled no list pages (links can only come from lists, so an
+            # article-only epoch provably discovers no edges — skipping keeps
+            # the committed graph key stable and the budget cache above warm
+            # through a long drain).
+            self.link_edges.append(
+                links.select(F.col("host").alias("src"),
+                             F.col("link.host").alias("dst"))
+                .filter(F.col("src") != F.col("dst")).distinct(),
+                epoch, replace=True)
+        discovered = links.select(
             F.col("link.url").alias("url"),
+            F.col("link.host").alias("host"),
             F.lit("article").alias("kind"),
             F.col("parser_class"), F.col("source_id"), F.col("priority"),
             (F.col("discovered_seq") + 1 + F.col("pos"))
@@ -501,29 +519,7 @@ class CrawlEngine:
             F.col("link.date_str").alias("date_str"),
             F.col("link.title").alias("list_title"),
             F.col("link.summary").alias("list_summary"),
-            F.lit(epoch + 1).alias("epoch_added")]
-        if cfg.rank_host_budgets:
-            disc_cols.append(F.col("host").alias("__src_host"))
-        discovered = links.select(*disc_cols)
-        discovered = (canon.with_canonical(discovered)
-                      .drop("url").withColumnRenamed("url_canon", "url"))
-        if cfg.rank_host_budgets and self.link_edges is not None and \
-                n_sched_total - n_sched_arts > 0:
-            # distinct host→host citations discovered this epoch (self-loops
-            # carry no authority signal). A replay overwrites its own epoch
-            # key (replace=True) — the graph a later epoch ranks is
-            # identical either way. Cost: one extra evaluation of the
-            # link-canonicalize pass, only when the feature is on AND the
-            # epoch actually scheduled list pages (links can only come from
-            # lists, so an article-only epoch provably discovers no edges —
-            # skipping keeps the committed graph key stable and the budget
-            # cache above warm through a long drain).
-            self.link_edges.append(
-                discovered.select(F.col("__src_host").alias("src"),
-                                  F.col("host").alias("dst"))
-                .filter(F.col("src") != F.col("dst")).distinct(),
-                epoch, replace=True)
-        discovered = discovered.select(*FRONTIER_COLS)
+            F.lit(epoch + 1).alias("epoch_added"))
         # in-page + cross-page dedup of discoveries, order preserved (D1)
         discovered = dedup.first_occurrence(discovered, "url", "discovered_seq")
 
@@ -531,12 +527,7 @@ class CrawlEngine:
         #     article rows
         parsed = ex.finish_articles(
             ok.filter(F.col("kind") == "article")
-              .withColumnRenamed("url", "url_canon")
-              .withColumn("art", F.struct(
-                  F.col("ext.title").alias("title"),
-                  F.col("ext.content").alias("content"),
-                  F.col("ext.summary").alias("summary"),
-                  F.col("ext.published_date").alias("published_date"))),
+              .withColumnRenamed("url", "url_canon"),
             start_date=cfg.start_date, end_date=cfg.end_date)
         out_articles = parsed.select(
             "source_id", "url", "title", "content", "published_date",
